@@ -22,6 +22,11 @@ object Bench {
     * PRIOR run's bench_full.json: >1.5x-and->150ms-slower queries land
     * in the line's `regressed` map (name -> ratio) so per-query plan
     * regressions stay visible as the suite grows.
+    *
+    * A query that throws in any pass is FAILED: it is listed by name in
+    * the line's `failed` array and, with its error, in bench_full.json's
+    * `failed` map, and it is left out of `total`, the per-query map and
+    * the regression reference — a failure never reads as a fast query.
     */
   // The harness window is ~2 KiB of stdout TAIL and sbt both prefixes
   // our line with "[info] " and appends a "[success] Total time: ..."
@@ -35,6 +40,17 @@ object Bench {
   // comma-decimal locale (de_DE...) would corrupt the JSON line
   private def fmt(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** The per-query min over passes of every query that never failed,
+    * and each failed query with its error.
+    */
+  def collate(runs: Seq[Map[String, Either[String, Double]]])
+      : (Map[String, Double], Map[String, String]) = {
+    val failed = runs.flatMap(_.collect { case (n, Left(e)) => n -> e }).toMap
+    val results = runs.flatMap(_.keys).distinct.filterNot(failed.contains)
+      .map(n => n -> runs.flatMap(_(n).toOption).min).toMap
+    (results, failed)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -144,7 +160,8 @@ object Bench {
     // Passes iterate over the WHOLE list before repeating, so a transient
     // host stall can't hit both observations of the same query.
     val passes = sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt).getOrElse(2)
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // Right(seconds), or Left(error) when the query threw
+    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Either[String, Double] = {
       // charge any shared-memo build that lands in this window to this
       // query by name (the FrameMemo build ledger, emitted below) —
       // the drift forensics that tells "plan got slower" apart from
@@ -155,9 +172,10 @@ object Bench {
       // noop-format write forces full evaluation of every output column
       // (count() lets Catalyst prune unused projections, under-measuring
       // map-only queries) with no driver transfer and no disk cost
-      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-      catch { case _: Throwable => () }
-      finally graft.queries.FrameMemo.currentConsumer.remove()
+      val error =
+        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
+        catch { case e: Throwable => Some(e.toString) }
+        finally graft.queries.FrameMemo.currentConsumer.remove()
       val elapsed = (System.nanoTime() - t0) / 1e9
       // Block hygiene (guide §5, ADVICE r15): per-invocation
       // localCheckpoint blocks (query-local shared subtrees) are only
@@ -174,7 +192,7 @@ object Bench {
       for ((id, rdd) <- spark.sparkContext.getPersistentRDDs
            if !persistedBefore.contains(id) && !owned.contains(id))
         rdd.unpersist(blocking = false)
-      elapsed
+      error.toLeft(elapsed)
     }
     // PRIOR-round per-query reference, keyed BY SCALE FACTOR AND CORE
     // COUNT (bench_ref_<sf>_c<cpus>.json — ratios across sfs are
@@ -210,10 +228,9 @@ object Bench {
         }
       } catch { case scala.util.control.NonFatal(_) => Map.empty }
 
-    val runs: Seq[Map[String, Double]] =
+    val runs: Seq[Map[String, Either[String, Double]]] =
       (1 to passes).map { _ => selected.map { case (n, f) => n -> timeOne(n, f) }.toMap }
-    val results: Map[String, Double] =
-      selected.keys.map { n => n -> runs.map(_(n)).min }.toMap
+    val (results, failed) = collate(runs)
     val total = if (results.nonEmpty) results.values.sum else 0.0
 
     // EPOCH-LOAD FACTOR: the median per-query ratio vs the prior
@@ -250,6 +267,7 @@ object Bench {
         .mkString("{", ",", "}")
       val tail = if (dropped > 0) s""","dropped":$dropped""" else ""
       val reg = regressed.mkString("{", ",", "}")
+      val fail = failed.keys.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
       // the memo TAX this run actually paid in wall-clock: the
       // concurrent-prewarm phase (overlapped builds count once, as
       // elapsed time) plus any stragglers that still built inside a
@@ -264,7 +282,7 @@ object Bench {
         if (only.nonEmpty) "bench_full_subset.json"
         else if (loadedArtifacts == 0) "bench_full.json"
         else "bench_full_warm.json"
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$tail,"regressed":$reg,"epoch":${fmt(epochFactor)},"memo_sec":${fmt(memoSec)},"full":"$fullRef","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$tail,"regressed":$reg,"failed":$fail,"epoch":${fmt(epochFactor)},"memo_sec":${fmt(memoSec)},"full":"$fullRef","sf":"$sfDir"}"""
     }
 
     // Full-precision record to disk (survives any stdout truncation).
@@ -277,13 +295,17 @@ object Bench {
     def jmap(m: Map[String, Double]): String =
       m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val full = jmap(results)
-    val passesJson = runs.map(jmap).mkString("[", ",", "]")
+    val passesJson = runs.map(r => jmap(r.collect { case (n, Right(v)) => n -> v }))
+      .mkString("[", ",", "]")
     // shared-memo build ledger: every FrameMemo build this session with
     // its cost and the query whose timed window absorbed it — the
     // regression guard's companion (a query whose 1.4x "regression" is
     // a memo build that moved consumers is drift, not a plan change)
     def jstr(s: String): String =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
+        .replaceAll("[\\x00-\\x1f]", " ") + "\""
+    val failedJson = failed.toSeq.sorted
+      .map { case (n, e) => jstr(n) + ":" + jstr(e) }.mkString("{", ",", "}")
     val memoJson = graft.queries.FrameMemo.buildLog.map {
       case (key, secs, consumer) =>
         s"""{"key":${jstr(key)},"sec":${fmt(secs)},"consumer":${jstr(consumer)}}"""
@@ -320,7 +342,7 @@ object Bench {
         else if (coldFull) "bench_full.json"
         else "bench_full_warm.json"
       val w = new java.io.PrintWriter(fullName, "UTF-8")
-      try w.println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$full,"passes":$passesJson,"memo_builds":$memoJson,"prewarm_wall":$prewarmWall,"epoch":$epochFactor,"sf":"$sfDir"}""")
+      try w.println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$full,"passes":$passesJson,"failed":$failedJson,"memo_builds":$memoJson,"prewarm_wall":$prewarmWall,"epoch":$epochFactor,"sf":"$sfDir"}""")
       finally w.close()
       // a FULL COLD run becomes the next run's per-sf regression
       // reference; subset and warm-artifact runs never touch it

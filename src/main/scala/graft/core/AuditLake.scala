@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Bucketed snapshot storage — the shuffle-elimination path for
@@ -89,13 +90,16 @@ object AuditLake {
     * in every [[compactLogDir]] call, so the window heals on the next
     * maintenance pass. Readers that must not see the window dedupe on
     * `audit_pk` (exact, cheap) — the same pk-idempotence the delivery
-    * path already relies on.
+    * path already relies on. A move that fails (Hadoop's `false`)
+    * aborts the pass before any input is deleted. `rename` is a test
+    * seam for that move.
     */
   def compactLogDir(spark: SparkSession, dir: String,
                     targetBytes: Long = 128L << 20,
-                    smallBytes: Long = 32L << 20): CompactionResult = {
-    import org.apache.hadoop.fs.Path
-    val fs = org.apache.hadoop.fs.FileSystem.get(
+                    smallBytes: Long = 32L << 20,
+                    rename: (FileSystem, Path, Path) => Boolean =
+                      (fs, from, to) => fs.rename(from, to)): CompactionResult = {
+    val fs = FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     recoverCompaction(spark, dir)
     val all = fs.listStatus(new Path(dir)).toSeq
@@ -120,10 +124,10 @@ object AuditLake {
         inputs.map(_.getName.hashCode.toLong).sum & Long.MaxValue)
       val finalPath = new Path(dir, s"part-compact-$tag.parquet")
       val tmpDir = new Path(dir, s"_compact_tmp_$gi")
-      val hasPk = spark.read.parquet(inputs.map(_.toString): _*)
-        .schema.fieldNames.contains(AuditSchema.PkCol)
-      val data = spark.read.parquet(inputs.map(_.toString): _*).coalesce(1)
-      (if (hasPk) data.sortWithinPartitions(AuditSchema.PkCol) else data)
+      val data = spark.read.parquet(inputs.map(_.toString): _*)
+      val one = data.coalesce(1)
+      (if (data.schema.fieldNames.contains(AuditSchema.PkCol))
+        one.sortWithinPartitions(AuditSchema.PkCol) else one)
         .write.mode(SaveMode.Overwrite).parquet(tmpDir.toString)
       val tmpPart = fs.listStatus(tmpDir)
         .find(s => s.getPath.getName.endsWith(".parquet")).get.getPath
@@ -131,7 +135,12 @@ object AuditLake {
       out.write((finalPath.toString + "\n" + tmpPart.toString + "\n" +
         inputs.map(_.toString).mkString("\n")).getBytes("UTF-8"))
       out.close()
-      fs.rename(tmpPart, finalPath)
+      // Hadoop rename reports failure via `false`: abort with the inputs
+      // untouched; the manifest stays, so the next pass's recovery
+      // finishes the move or abandons it
+      if (!rename(fs, tmpPart, finalPath))
+        sys.error(s"compaction aborted: could not move $tmpPart to " +
+          s"$finalPath; inputs untouched")
       inputs.foreach(p => fs.delete(p, false))
       fs.delete(new Path(dir, ManifestName), false)
       fs.delete(tmpDir, true)
@@ -150,8 +159,7 @@ object AuditLake {
     * Returns true if there was anything to recover.
     */
   def recoverCompaction(spark: SparkSession, dir: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val fs = org.apache.hadoop.fs.FileSystem.get(
+    val fs = FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
     val m = new Path(dir, ManifestName)
     if (!fs.exists(m)) return false

@@ -1,6 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental watermark sync: audit log -> CSV sink (SURVEY.md §2.1
@@ -24,6 +25,12 @@ import org.apache.spark.sql.functions._
   * scale, SURVEY.md §7.4.4); [[SyncJob.syncTable]] takes a
   * `singleFile` flag that coalesces to one part for reference-parity
   * artifacts at test scale.
+  *
+  * Each table costs one Spark pass: [[SyncJob.syncTable]] takes the
+  * delivered count and watermark from an observation on its single
+  * sorted write and publishes that write by renaming its staged part
+  * files into the sink before the sidecar advances; [[SyncJob.syncAll]]
+  * runs the tables concurrently.
   */
 object SyncJob {
 
@@ -44,6 +51,11 @@ object SyncJob {
     */
   val WatermarkFile = "_watermark"
 
+  /** Name prefix of the per-run staging dir a sync writes into before
+    * it publishes (the underscore hides it from readers).
+    */
+  private val StagingPrefix = "_staging-"
+
   /** Read the sink-side watermark: greatest `audit_pk` already
     * delivered, or `initial` (-1 like the reference's "no file yet"
     * path) when the sink is empty/absent.
@@ -60,20 +72,33 @@ object SyncJob {
   def watermark(spark: SparkSession, sinkDir: String,
                 pkCol: String = AuditSchema.PkCol,
                 initial: Long = -1L): Long = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val path = new org.apache.hadoop.fs.Path(sinkDir)
-    if (!fs.exists(path)) return initial
-    val files = fs.listStatus(path).filter(f =>
-      f.isFile && f.getPath.getName.endsWith(".csv"))
-    if (files.isEmpty) return initial
+    val fs = fsOf(spark)
+    val path = new Path(sinkDir)
+    watermarkOf(spark, fs, path, csvParts(list(fs, path)), initial)
+  }
+
+  private def fsOf(spark: SparkSession): FileSystem =
+    FileSystem.get(spark.sparkContext.hadoopConfiguration)
+
+  /** One listing of the sink directory (empty when it is absent). */
+  private def list(fs: FileSystem, sink: Path): Seq[FileStatus] =
+    if (fs.exists(sink)) fs.listStatus(sink).toSeq else Nil
+
+  /** The delivered CSV part files of a sink listing, in name order. */
+  private def csvParts(listing: Seq[FileStatus]): Seq[FileStatus] =
+    listing.filter(f => f.isFile && f.getPath.getName.endsWith(".csv"))
+      .sortBy(_.getPath.getName)
+
+  private def watermarkOf(spark: SparkSession, fs: FileSystem, path: Path,
+                          parts: Seq[FileStatus], initial: Long): Long = {
+    if (parts.isEmpty) return initial
     readSidecar(fs, path) match {
-      case Some((wm, cnt)) if cnt == files.length => wm
+      case Some((wm, cnt)) if cnt == parts.length => wm
       case _ =>
         val sink = spark.read
           .options(CsvOptions)
           .option("inferSchema", "false")
-          .csv(sinkDir)
+          .csv(path.toString)
         // audit_pk is by contract the LAST column
         // (cdc_audit_sync_mysql.php:352 / AuditSchema invariant)
         val last = sink.columns.last
@@ -91,15 +116,14 @@ object SyncJob {
         // clients surface denied writes as RuntimeException/
         // SecurityException subtypes too, and ANY sidecar write failure
         // must degrade to the slow scan, never fail the read
-        try writeSidecar(fs, path, wm, files.length)
+        try writeSidecar(fs, path, wm, parts.length)
         catch { case scala.util.control.NonFatal(_) => () }
         wm
     }
   }
 
-  private def readSidecar(fs: org.apache.hadoop.fs.FileSystem,
-                          sinkPath: org.apache.hadoop.fs.Path): Option[(Long, Int)] = {
-    val p = new org.apache.hadoop.fs.Path(sinkPath, WatermarkFile)
+  private def readSidecar(fs: FileSystem, sinkPath: Path): Option[(Long, Int)] = {
+    val p = new Path(sinkPath, WatermarkFile)
     if (!fs.exists(p)) return None
     val in = fs.open(p)
     try {
@@ -113,14 +137,9 @@ object SyncJob {
     finally in.close()
   }
 
-  private def writeSidecar(fs: org.apache.hadoop.fs.FileSystem,
-                           sinkPath: org.apache.hadoop.fs.Path, wm: Long,
-                           knownCsvCount: Int = -1): Unit = {
-    val csvCount =
-      if (knownCsvCount >= 0) knownCsvCount
-      else fs.listStatus(sinkPath).count(f =>
-        f.isFile && f.getPath.getName.endsWith(".csv"))
-    val out = fs.create(new org.apache.hadoop.fs.Path(sinkPath, WatermarkFile), true)
+  private def writeSidecar(fs: FileSystem, sinkPath: Path, wm: Long,
+                           csvCount: Int): Unit = {
+    val out = fs.create(new Path(sinkPath, WatermarkFile), true)
     try out.write(s"$wm,$csvCount\n".getBytes("UTF-8"))
     finally out.close()
   }
@@ -137,69 +156,121 @@ object SyncJob {
     * sink is empty/absent.
     */
   def sinkColumns(spark: SparkSession, sinkDir: String): Option[Seq[String]] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val path = new org.apache.hadoop.fs.Path(sinkDir)
-    if (!fs.exists(path)) return None
-    val files = fs.listStatus(path).filter(f =>
-      f.isFile && f.getPath.getName.endsWith(".csv"))
-    if (files.isEmpty) None
-    else Some(spark.read.options(CsvOptions).csv(sinkDir).columns.toSeq)
+    val fs = fsOf(spark)
+    headerOf(fs, csvParts(list(fs, new Path(sinkDir))))
   }
+
+  /** The header record of the first non-empty part file, read straight
+    * from the file system with the writer's quote and escape rules (`"`
+    * encloses, `""` is a literal quote, a quoted field may span lines) —
+    * no Spark job.
+    */
+  private def headerOf(fs: FileSystem, parts: Seq[FileStatus]): Option[Seq[String]] =
+    parts.find(_.getLen > 0).map { part =>
+      val in = new java.io.BufferedReader(
+        new java.io.InputStreamReader(fs.open(part.getPath), "UTF-8"))
+      try {
+        val fields = scala.collection.mutable.ArrayBuffer.empty[String]
+        val cur = new StringBuilder
+        var quoted = false
+        var c = in.read()
+        while (c >= 0 && (quoted || c != '\n')) {
+          if (c == '"' && quoted) {
+            in.mark(1)
+            if (in.read() == '"') cur += '"' else { in.reset(); quoted = false }
+          } else if (c == '"' && cur.isEmpty) quoted = true
+          else if (c == ',' && !quoted) { fields += cur.result(); cur.clear() }
+          else cur += c.toChar
+          c = in.read()
+        }
+        (fields += cur.result()).toSeq
+      } finally in.close()
+    }
 
   /** One sync run for one table: read watermark from the sink, append
     * everything above it. Returns the number of rows delivered.
     * Idempotent: re-running with no new audit rows appends nothing.
     *
+    * One Spark pass: the rows above the watermark are sorted by
+    * `audit_pk` and written once, and an observation on that write
+    * yields their count and max `audit_pk`. The delivered rows and the
+    * recorded watermark therefore come from the same evaluation, even
+    * against a LIVE source (the JDBC poller's table) whose contents
+    * change between reads.
+    *
+    * Staged publish: the write lands in a `_`-prefixed staging dir
+    * inside the sink, invisible to [[watermark]] and to CSV readers.
+    * Its part files then move into the sink in `audit_pk` order, and
+    * only after every move succeeded does the sidecar advance. A failed
+    * move (Hadoop reports it as `false`) aborts before the sidecar, so
+    * the count mismatch makes the next run rescan and re-deliver what
+    * did not land; a crash before the publish leaves only the staging
+    * dir, which the next run deletes. An empty sync publishes nothing.
+    *
     * Fails fast if the sink's header no longer matches the log schema —
     * the reference's wished-for drift check (README.md:210-212 known
     * issue; todo README.md:222; SURVEY.md §1.2).
+    * The header comes from the same single listing of the sink as the
+    * watermark. `rename` is a test seam for the publish moves.
     */
   def syncTable(spark: SparkSession, log: DataFrame, sinkDir: String,
-                singleFile: Boolean = false): Long = {
-    sinkColumns(spark, sinkDir).foreach { cols =>
+                singleFile: Boolean = false,
+                rename: (FileSystem, Path, Path) => Boolean =
+                  (fs, from, to) => fs.rename(from, to)): Long = {
+    val fs = fsOf(spark)
+    val sink = new Path(sinkDir)
+    val listing = list(fs, sink)
+    val parts = csvParts(listing)
+    headerOf(fs, parts).foreach { cols =>
       require(cols == log.columns.toSeq,
         s"schema drift: sink $sinkDir has columns ${cols.mkString(",")} " +
           s"but the audit log has ${log.columns.mkString(",")}")
     }
-    val wm = watermark(spark, sinkDir)
-    // SNAPSHOT the batch (eager localCheckpoint): the stats aggregate
-    // and the sink write are separate actions, and against a LIVE
-    // source (the JDBC poller's table) a second evaluation could see
-    // rows the recorded watermark doesn't cover — delivered-but-
-    // uncovered rows would re-deliver on the next poll. One
-    // materialization feeds both actions, so sidecar and sink always
-    // agree.
-    val fresh = above(log, wm).localCheckpoint()
-    val stats = fresh.agg(count(lit(1)), max(col(AuditSchema.PkCol).cast("long"))).head()
-    val n     = stats.getLong(0)
+    // a staging dir left by a run that died before its publish: none
+    // of its rows became visible, so the write below delivers them anew
+    listing.filter(s => s.isDirectory && s.getPath.getName.startsWith(StagingPrefix))
+      .foreach(s => fs.delete(s.getPath, true))
+    val wm = watermarkOf(spark, fs, sink, parts, -1L)
+    val run = StagingPrefix + java.util.UUID.randomUUID()
+    val staging = new Path(sink, run)
+    val stats = Observation(run)
+    val ordered = above(log, wm).orderBy(col(AuditSchema.PkCol))
+    // observed ABOVE the sort: the range partitioner's sampling pass
+    // runs below it, so only the rows the write consumes are counted
+    (if (singleFile) ordered.coalesce(1) else ordered)
+      .observe(stats, count(lit(1)).as("n"),
+        max(col(AuditSchema.PkCol).cast("long")).as("wm"))
+      .write.options(CsvOptions).csv(staging.toString)
+    val n = stats.get("n").asInstanceOf[Long]
     if (n > 0) {
-      val ordered = fresh.orderBy(col(AuditSchema.PkCol))
-      val out     = if (singleFile) ordered.coalesce(1) else ordered
-      out.write.mode("append").options(CsvOptions).csv(sinkDir)
-      // advance the O(1) watermark sidecar only after the append
-      // commits; a crash in between leaves a count mismatch, which the
-      // next run detects and repairs with a full scan
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      writeSidecar(fs, new org.apache.hadoop.fs.Path(sinkDir), stats.getLong(1))
+      val staged = csvParts(list(fs, staging))
+      staged.foreach { s =>
+        val target = new Path(sink, s.getPath.getName)
+        if (!rename(fs, s.getPath, target))
+          sys.error(s"sync aborted: could not move ${s.getPath} to $target; " +
+            "the sidecar is not advanced, so the next run re-delivers what is missing")
+      }
+      writeSidecar(fs, sink, stats.get("wm").asInstanceOf[Long], parts.length + staged.length)
     }
+    fs.delete(staging, true)
     n
   }
 
   /** Full reference `sync_audit_tables` orchestration: filter the table
     * set to audit tables (substring match, P4) and an optional include
     * list (P5), sync each, optionally wipe (keep-last retention).
-    * Per-table work is independent — at scale each table is its own
-    * Spark job (the reference processed tables serially in one PHP
-    * process, SURVEY.md §4 last row) — and `parallelism > 1` makes
-    * that concrete: tables submit CONCURRENTLY from a scoped
-    * fixed-size pool, so a cluster with idle executors overlaps the
-    * per-table scan/write jobs instead of draining them one at a time
-    * (Spark's scheduler is thread-safe for concurrent job submission;
-    * each table's watermark sidecar is its own directory, so no state
-    * is shared between threads). Every table runs to completion even
-    * when another fails — partial progress is per-table durable,
+    * Per-table work is independent (the reference processed tables
+    * serially in one PHP process, SURVEY.md §4 last row), so tables
+    * submit CONCURRENTLY from a scoped fixed-size pool: each table's
+    * sync is a short chain of small jobs, and overlapping them fills
+    * cores a single table leaves idle (Spark's scheduler is
+    * thread-safe for concurrent job submission; each table's sink and
+    * watermark sidecar is its own directory, so no state is shared
+    * between threads). `parallelism` caps the pool; the default 0
+    * sizes it from the session as `min(tables,
+    * sparkContext.defaultParallelism)`, and 1 runs the tables one after
+    * another on the calling thread. Every table runs to completion
+    * even when another fails — partial progress is per-table durable,
     * exactly like separate cron invocations — and the FIRST failure is
     * rethrown after the pool drains. `onTable` is a test seam fired as
     * each table's job starts in its worker thread.
@@ -208,40 +279,52 @@ object SyncJob {
               logs: Map[String, DataFrame],
               sinkRoot: String,
               include: Option[Set[String]] = None,
-              parallelism: Int = 1,
+              parallelism: Int = 0,
               onTable: String => Unit = _ => ()): Map[String, Long] = {
-    require(parallelism >= 1, "parallelism must be >= 1")
     val selected = logs.filter { case (name, _) =>
       AuditSchema.isAuditTable(name) && include.forall(_.contains(name))
-    }
-    def one(name: String, log: DataFrame): Long = {
+    }.toSeq
+    val results = mapConcurrently(spark, selected.map(_._1), parallelism) { name =>
       onTable(name)
       spark.sparkContext.setJobDescription(s"syncTable($name)")
-      try syncTable(spark, log, s"$sinkRoot/$name")
+      try syncTable(spark, logs(name), s"$sinkRoot/$name")
       finally spark.sparkContext.setJobDescription(null)
     }
-    if (parallelism == 1 || selected.size <= 1)
-      selected.map { case (name, log) => name -> one(name, log) }
+    selected.map(_._1).zip(results).toMap
+  }
+
+  /** Threads [[mapConcurrently]] uses for `items` items. */
+  def poolSize(spark: SparkSession, items: Int, parallelism: Int): Int = {
+    require(parallelism >= 0, "parallelism must be >= 0")
+    math.min(items,
+      if (parallelism == 0) spark.sparkContext.defaultParallelism else parallelism)
+  }
+
+  /** Run `f` over `items` on a pool of `parallelism` threads (0: one
+    * per item up to the session's default parallelism; 1: in order on
+    * the calling thread) and return the results in item order. Every
+    * item runs even when another fails; the first failure in item
+    * order is rethrown after the pool drains.
+    */
+  def mapConcurrently[A, B](spark: SparkSession, items: Seq[A], parallelism: Int)
+                               (f: A => B): Seq[B] = {
+    val threads = poolSize(spark, items.size, parallelism)
+    if (threads <= 1) items.map(f)
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(parallelism, selected.size))
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
       try {
-        val futs = selected.toSeq.map { case (name, log) =>
-          name -> pool.submit(new java.util.concurrent.Callable[Long] {
-            override def call(): Long = one(name, log)
-          })
-        }
-        // drain EVERY table before surfacing a failure: a broken table
+        val futs = items.map(a => pool.submit(new java.util.concurrent.Callable[B] {
+          override def call(): B = f(a)
+        }))
+        // drain EVERY item before surfacing a failure: a broken table
         // must not abandon its siblings mid-write
-        val results = futs.map { case (name, f) =>
-          name -> scala.util.Try(f.get())
-        }
+        val results = futs.map(fut => scala.util.Try(fut.get()))
         results.collectFirst {
-          case (_, scala.util.Failure(e: java.util.concurrent.ExecutionException)) =>
+          case scala.util.Failure(e: java.util.concurrent.ExecutionException) =>
             throw e.getCause
-          case (_, scala.util.Failure(e)) => throw e
+          case scala.util.Failure(e) => throw e
         }
-        results.map { case (name, r) => name -> r.get }.toMap
+        results.map(_.get)
       } finally pool.shutdown()
     }
   }
@@ -270,9 +353,8 @@ object SyncJob {
   def wipeLogDir(spark: SparkSession, logDir: String,
                  afterSnapshot: () => Unit = () => (),
                  maxAge: Option[org.apache.spark.sql.Column] = None): Long = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dir = new org.apache.hadoop.fs.Path(logDir)
+    val fs = fsOf(spark)
+    val dir = new Path(logDir)
     if (!fs.exists(dir)) return 0L
     val snapshot = fs.listStatus(dir).filter(f =>
       f.isFile && f.getPath.getName.endsWith(".parquet")).map(_.getPath)
@@ -282,7 +364,7 @@ object SyncJob {
     // its @TODO form (keep the trailing age window + the newest row)
     val kept = maxAge.fold(Retention.keepLastGlobal(log))(a =>
       Retention.keepYoungerThan(log, a))
-    val tmp  = new org.apache.hadoop.fs.Path(logDir + ".wipe.tmp")
+    val tmp  = new Path(logDir + ".wipe.tmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)
     // keep-last retains ONE row — a single part file is right. The age
     // window can retain nearly the whole log, so funneling it through
@@ -292,8 +374,11 @@ object SyncJob {
     val rewritten =
       if (maxAge.isEmpty) kept.coalesce(1)
       else kept.coalesce(math.max(1, snapshot.length))
-    rewritten.write.mode("overwrite").parquet(tmp.toString)
-    val n = spark.read.parquet(tmp.toString).count()
+    // the kept-row count comes from the rewrite itself (no re-read)
+    val retained = Observation(s"wipe-${java.util.UUID.randomUUID()}")
+    rewritten.observe(retained, count(lit(1)).as("n"))
+      .write.mode("overwrite").parquet(tmp.toString)
+    val n = retained.get("n").asInstanceOf[Long]
     afterSnapshot()
     // move the kept row in BEFORE deleting its sources: the log is
     // never missing its newest row, whatever happens mid-wipe. Hadoop
@@ -303,7 +388,7 @@ object SyncJob {
     fs.listStatus(tmp)
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       .foreach { f =>
-        val target = new org.apache.hadoop.fs.Path(dir, "wipe-kept-" + f.getPath.getName)
+        val target = new Path(dir, "wipe-kept-" + f.getPath.getName)
         if (!fs.rename(f.getPath, target))
           sys.error(s"wipe aborted: could not move kept file ${f.getPath} " +
             s"to $target; log untouched")

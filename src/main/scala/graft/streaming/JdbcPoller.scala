@@ -20,7 +20,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    frame, so Spark pushes it into the remote WHERE clause — the
   *    reference's one data-plane optimization, per poll
   *    (pushdown pinned by JdbcCaptureSpec against embedded Derby),
-  *  - the append advances the sidecar only after it commits.
+  *  - one evaluation of the JDBC frame both writes the rows and
+  *    yields the watermark the sidecar records (an observation on
+  *    the write), so rows inserted while the poll runs can never be
+  *    delivered without being covered, nor covered without being
+  *    delivered,
+  *  - the append is staged and advances the sidecar only after its
+  *    part files are published into the sink.
   *
   * Exactly-once across restarts follows from the watermark living in
   * the SINK, not the stream state: re-firing a poll after a crash (or

@@ -414,12 +414,14 @@ object CurateTool {
   * newest row — parquet log compaction, or the reference's bounded
   * concurrent-writer-safe DELETE on the live table
   * ([[AuditSource.wipeJdbcAudit]]).
-  * `--par N` submits up to N tables' Spark jobs CONCURRENTLY (the
-  * [[graft.core.SyncJob.syncAll]] pool) — per-table work shares no
-  * state (own sink dir, own watermark sidecar), so a cluster with
-  * idle executors overlaps the scans instead of draining them one at
-  * a time. Every table runs to completion even when a sibling fails;
-  * the first failure is rethrown after the pool drains.
+  * Tables sync CONCURRENTLY on the pool [[graft.core.SyncJob.syncAll]]
+  * uses ([[graft.core.SyncJob.mapConcurrently]]): by default one
+  * thread per table up to the session's default parallelism, and
+  * `--par N` caps the pool at N (`--par 1` syncs one table at a time).
+  * Per-table work shares no state (own sink dir, own watermark
+  * sidecar), so the tables' small jobs overlap instead of draining one
+  * at a time. Every table runs to completion even when a sibling
+  * fails; the first failure is rethrown after the pool drains.
   */
 object SyncTool {
   def main(args: Array[String]): Unit = {
@@ -432,7 +434,7 @@ object SyncTool {
     // log's own newest audit_timestamp) instead of only the newest row
     val wipeAge = opts.get("--wipe-age-sec").filter(_ != "true").map(_.toLong)
       .map(n => expr(s"INTERVAL $n SECONDS"))
-    val par = opts.get("--par").filter(_ != "true").map(_.toInt).getOrElse(1)
+    val par = opts.get("--par").filter(_ != "true").map(_.toInt).getOrElse(0)
     val inc = Cli.include(opts)
     val log = Cli.logger(opts)
     val (spark, owned) = Cli.session()
@@ -466,8 +468,9 @@ object SyncTool {
           (AuditSource.discoverAuditDirs(spark, opts("--logs"))
             .filter(t => inc.forall(_.contains(t))), "")
       }
+      val threads = SyncJob.poolSize(spark, tables.size, par)
       log.info(s"[sync] syncing ${tables.size} audit table(s)" +
-        (if (par > 1) s", $par-way concurrent" else "") +
+        (if (threads > 1) s", $threads-way concurrent" else "") +
         jdbcUrl.map(u => s" from $u").getOrElse(""))
       def one(t: String): Unit = jdbcUrl match {
         case Some(url) =>
@@ -501,24 +504,7 @@ object SyncTool {
             log.warn(s"[sync] $t: delivered $d rows")
           }
       }
-      if (par <= 1 || tables.size <= 1) tables.foreach(one)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(par, tables.size))
-        try {
-          val futs = tables.map(t => pool.submit(
-            new java.util.concurrent.Callable[Unit] {
-              override def call(): Unit = one(t)
-            }))
-          val results = futs.map(f => scala.util.Try(f.get()))
-          results.collectFirst {
-            case scala.util.Failure(e: java.util.concurrent.ExecutionException) =>
-              throw e.getCause
-            case scala.util.Failure(e) => throw e
-          }
-          ()
-        } finally pool.shutdown()
-      }
+      SyncJob.mapConcurrently(spark, tables, par)(one)
     } finally {
       if (owned) spark.stop()
       log.close()

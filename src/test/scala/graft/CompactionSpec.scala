@@ -80,4 +80,21 @@ class CompactionSpec extends SparkSpec {
     assert(spark.read.parquet(dir).count() === rows, "row set preserved")
     assert(!AuditLake.recoverCompaction(spark, dir), "idempotent: nothing left")
   }
+
+  test("a compacted file that cannot be moved into place aborts the " +
+    "pass with every input untouched; the next pass finishes it") {
+    val dir = tmpDir("compact-rename")
+    writeSmallAppends(dir, 4)
+    val inputs = partFiles(dir)
+    val before = spark.read.parquet(dir).as[(Long, String)].collect().sorted.toSeq
+    val e = intercept[RuntimeException](AuditLake.compactLogDir(spark, dir,
+      targetBytes = 1L << 20, smallBytes = 1L << 20, rename = (_, _, _) => false))
+    assert(e.getMessage.contains("compaction aborted"))
+    assert(partFiles(dir).map(_.getName).sorted === inputs.map(_.getName).sorted)
+    assert(spark.read.parquet(dir).as[(Long, String)].collect().sorted.toSeq === before)
+    val res = AuditLake.compactLogDir(spark, dir,
+      targetBytes = 1L << 20, smallBytes = 1L << 20)
+    assert(partFiles(dir).size === 1 && res.filesAfter <= 1)
+    assert(spark.read.parquet(dir).as[(Long, String)].collect().sorted.toSeq === before)
+  }
 }
